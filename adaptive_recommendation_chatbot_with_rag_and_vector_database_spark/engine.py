@@ -41,7 +41,10 @@ from .functions.embedder import EMBED_DIM, embed_text
 from .operators.retrieval import (
     DEFAULT_K,
     REFUSAL_PREFIX,
-    postprocess_answers,
+    postprocess_answer,
+    # public re-export: the Column form, for callers holding a frame of
+    # answers; ask() post-processes its one answer with the scalar twin
+    postprocess_answers,  # noqa: F401
     topk_cosine,
     write_index_incremental,
 )
@@ -134,10 +137,15 @@ class RagEngine:
     ann_nprobe: int = 8
     _sessions: dict[str, list[dict]] = field(default_factory=dict)
     _index_rows: int | None = field(default=None, repr=False)
+    # the index parquet's schema, read once: a schema-less read runs a
+    # footer-reading Spark job per question; reset with _index_rows
+    _index_schema: object = field(default=None, repr=False)
     # True once THIS instance has verified (or written) an IVF layout
     # matching the current corpus — the per-question short-circuit; an
     # in-session corpus change resets it
     _ann_built: bool = field(default=False, repr=False)
+    # the IVF layout's schema (``cell`` included); reset with _ann_built
+    _ivf_schema: object = field(default=None, repr=False)
     _lex_built: bool = field(default=False, repr=False)
     _codebook: object = field(default=None, repr=False)
 
@@ -153,6 +161,7 @@ class RagEngine:
         AI.py:89-96) — deferred to the first retrieval after a change,
         so a sub-threshold build never pays even the routing count."""
         self._index_rows = None  # size changed: re-count lazily
+        self._index_schema = None
         n_new = write_index_incremental(
             docs, self.index_path, chunk_size=self.chunk_size, dim=self.dim
         )
@@ -163,6 +172,7 @@ class RagEngine:
         # (fingerprint probe) or rebuild instead
         if n_new > 0:
             self._ann_built = False
+            self._ivf_schema = None
             self._lex_built = False
             self._codebook = None
         return n_new
@@ -425,7 +435,11 @@ class RagEngine:
         return self.index_documents(docs)
 
     def index(self) -> DataFrame:
-        return self.spark.read.parquet(self.index_path)
+        # files are listed per read (appends are seen); only the schema
+        # inference job is paid once
+        if self._index_schema is None:
+            self._index_schema = self.spark.read.parquet(self.index_path).schema
+        return self.spark.read.schema(self._index_schema).parquet(self.index_path)
 
     # -- query path (J1, O1, A1, P1, P2) ------------------------------------
 
@@ -440,8 +454,10 @@ class RagEngine:
         LangChain retriever switch the reference could pass at
         AI.py:138 (``as_retriever(search_type=...)``):
 
-        - ``"similarity"`` (reference behavior): one broadcastable
-          literal query vector scored against the index scan.
+        - ``"similarity"`` (reference behavior): one literal query
+          vector scored against the index scan (exact route) or the
+          probed IVF cells — one Spark job per question on both routes
+          once the frame is collected (``_topk_chunks``).
         - ``"mmr"``: fetch_k cosine candidates, then the MMR greedy
           (operators/ranking weights) diversifies down to k. The
           greedy here runs driver-side over the collected fetch_k≈2k
@@ -514,9 +530,18 @@ class RagEngine:
         re-scans the full index per question (inline LSH banding
         included — measured 17.9 s vs the exact scan's 3.4 s at the
         2 M-chunk tier) just races the exact scan and loses; only
-        index-time structure beats it. The probe id −1 cannot collide
-        with any packed chunk id. Output schema matches the exact
-        path: (doc_id, chunk_id, *payload, score)."""
+        index-time structure beats it. The masked id −1 (the
+        multi-probe operator's self-match filter, kept so results stay
+        identical) cannot collide with any packed chunk id. Output
+        schema matches the exact path: (doc_id, chunk_id, *payload,
+        score).
+
+        One Spark job per question on both routes: the index and IVF
+        layout schemas are read once per corpus (no per-question
+        inference job), and the IVF route scores the question as a plan
+        literal over the pruned cells (``ivf_topk_cells``:
+        TakeOrderedAndProject, no probe frame, broadcast join, window
+        or Python worker), so collecting the frame is the only job."""
         if self._below_ann_threshold():
             return topk_cosine(
                 self.index(),
@@ -525,37 +550,31 @@ class RagEngine:
                 id_cols=("doc_id", "chunk_id"),
                 payload_cols=payload_cols,
             )
-        from .operators.similarity import ivf_knn_pruned, nearest_cells
+        from .operators.similarity import ivf_topk_cells, nearest_cells, read_cells
 
         self._ensure_ann_index()
-        probes = self.spark.createDataFrame(
-            [(-1, [float(x) for x in qvec])], "query_id long, qvec array<double>"
-        )
-        codebook = self._load_codebook()
-        hits = ivf_knn_pruned(
+        ivf_path = self._ann_paths()[0]
+        # the question vector is already driver-side: its cells come
+        # from a numpy matmul, not an Arrow UDF + collect round-trip
+        cells = nearest_cells(qvec, self._load_codebook(), self.ann_nprobe)
+        if self._ivf_schema is None:
+            self._ivf_schema = read_cells(self.spark, ivf_path, cells).schema
+        return ivf_topk_cells(
             self.spark,
-            self._ann_paths()[0],
-            probes,
-            codebook,
+            ivf_path,
+            qvec,
+            cells,
             k=k,
-            nprobe=self.ann_nprobe,
-            # the question vector is already driver-side: its cells come
-            # from a numpy matmul, not an Arrow UDF + collect round-trip
-            probe_cells=nearest_cells(qvec, codebook, self.ann_nprobe),
-            # the probe frame is built 4 lines up with exactly one row;
-            # declaring it skips probe_cells' verification count job
-            n_probes=1,
             index_id="cid",
             # payload is co-located in the layout, so hits come back
             # fully materialized from the probed partitions — a lookup
             # join against the full chunk index would re-scan 2 M rows
             # to serve 4 of them (measured: that join alone cost more
             # than the brute-force scan it was meant to avoid)
-            payload_cols=("doc_id", "chunk_id", *payload_cols),
+            out_cols=("doc_id", "chunk_id", *payload_cols),
+            exclude_id=-1,
+            schema=self._ivf_schema,
         )
-        return hits.select(
-            "doc_id", "chunk_id", *payload_cols, "score"
-        ).orderBy(F.desc("score"), F.asc("doc_id"), F.asc("chunk_id"))
 
     def _retrieve_mmr(self, question: str, k: int, fetch_k: int) -> DataFrame:
         # Delegates the λ-scoring to the SAME greedy core the
@@ -693,19 +712,16 @@ class RagEngine:
     def ask(self, question: str, session_id: str | None = None) -> dict:
         """Full reference query path; returns the reference's result
         shape {input, context, answer} (AI.py:173-185) plus the
-        retrieved rows."""
+        retrieved rows. One Spark job per question on both routes: the
+        retrieval collect; rewrite, answerer and post-process run
+        driver-side."""
         history = self._sessions.get(session_id, []) if session_id else []
         effective = self.rewrite(question, history)
         retrieved = self.retrieve(effective).collect()  # k rows, k≈4
         context = "\n\n".join(r.text for r in retrieved)
-        raw = self.answerer(effective, context)
-        answer = (
-            postprocess_answers(
-                self.spark.createDataFrame([(raw,)], "answer string")
-            )
-            .collect()[0]
-            .answer
-        )
+        # one answer string: the driver-side twin of postprocess_answers
+        # (a createDataFrame+collect round-trip cost a Spark job)
+        answer = postprocess_answer(self.answerer(effective, context))
         if session_id is not None:
             log = self._sessions.setdefault(session_id, [])  # get-or-create
             log.append({"role": "user", "content": question})

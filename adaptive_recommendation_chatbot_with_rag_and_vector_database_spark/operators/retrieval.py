@@ -373,3 +373,20 @@ def postprocess_answers(
         col.startswith(refusal_prefix), F.lit(refusal_message)
     ).otherwise(F.split(col, "\n").getItem(0))
     return answers.withColumn(answer_col, cleaned)
+
+
+def postprocess_answer(
+    answer: str | None,
+    refusal_prefix: str = REFUSAL_PREFIX,
+    refusal_message: str = REFUSAL_MESSAGE,
+) -> str | None:
+    """Scalar twin of :func:`postprocess_answers` for ONE answer the
+    caller already holds driver-side (the interactive ``ask``): same
+    rule, same constants, no Spark job. ``None`` stays ``None`` (the
+    Column form's null propagation); ``split("\\n")[0]`` is the
+    first element of Spark's ``split(col, "\\n")``."""
+    if answer is None:
+        return None
+    if answer.startswith(refusal_prefix):
+        return refusal_message
+    return answer.split("\n", 1)[0]

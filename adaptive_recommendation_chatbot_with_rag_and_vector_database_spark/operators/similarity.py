@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.vector import cosine_sim
+from ..functions.vector import cosine_sim, cosine_sim_to_const
 
 SEED = 42
 # per-chunk dense-block budget for the cogrouped cell kernel (float64
@@ -406,6 +406,31 @@ def append_ivf_index(
     )
 
 
+def read_cells(spark, path: str, cells, schema=None) -> DataFrame:
+    """The rows of ``cells`` in a cell-partitioned layout, ``cell``
+    column included. Reads ONLY the probed cell directories (basePath
+    keeps the `cell` partition column): a plain read of the layout root
+    makes the driver list EVERY cell directory before pruning —
+    measured as the dominant per-question cost at 2048 cells — while
+    this lists nprobe of them. Empty cells have no directory; skip
+    them. A known ``schema`` (the layout's, ``cell`` included) skips
+    the footer-reading inference job; files are still listed per
+    read, so appended files are seen."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    subdirs = []
+    for c in cells:
+        p = f"{path}/cell={c}"
+        jp = jvm.org.apache.hadoop.fs.Path(p)
+        if jp.getFileSystem(conf).exists(jp):
+            subdirs.append(p)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if subdirs:
+        return reader.option("basePath", path).parquet(*subdirs)
+    # degenerate: every probed cell empty — scan-and-prune root
+    return reader.parquet(path).filter(F.col("cell").isin(list(cells)))
+
+
 def ivf_knn_pruned(
     spark,
     path: str,
@@ -469,25 +494,7 @@ def ivf_knn_pruned(
         probed_cells = sorted(
             {r.cell for r in prb_c.select("cell").distinct().collect()}
         )
-    # read ONLY the probed cell directories (basePath keeps the `cell`
-    # partition column): a plain read of the layout root makes the
-    # driver list EVERY cell directory before pruning — measured as the
-    # dominant per-question cost at 2048 cells — while this lists
-    # nprobe of them. Empty cells have no directory; skip them.
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    subdirs = []
-    for c in probed_cells:
-        p = f"{path}/cell={c}"
-        jp = jvm.org.apache.hadoop.fs.Path(p)
-        if jp.getFileSystem(conf).exists(jp):
-            subdirs.append(p)
-    if subdirs:
-        idx = spark.read.option("basePath", path).parquet(*subdirs)
-    else:  # degenerate: every probed cell empty — scan-and-prune root
-        idx = spark.read.parquet(path).filter(
-            F.col("cell").isin(probed_cells)
-        )
+    idx = read_cells(spark, path, probed_cells)
     cand = (
         idx.join(F.broadcast(prb_c), "cell")
         .filter(F.col(index_id) != F.col(query_id))
@@ -509,6 +516,45 @@ def ivf_knn_pruned(
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(index_id))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+
+
+def ivf_topk_cells(
+    spark,
+    path: str,
+    qvec,
+    cells: list[int],
+    k: int = 4,
+    index_id: str = "vec_id",
+    index_vec: str = "embedding",
+    out_cols: tuple[str, ...] = (),
+    exclude_id: int | None = None,
+    schema=None,
+) -> DataFrame:
+    """Single-vector IVF top-k over the cells ``cells`` of a
+    cell-partitioned layout: the interactive-question twin of
+    ``ivf_knn_pruned(probe_cells=cells, n_probes=1)``, in ONE Spark
+    job and no Python worker. The question vector is a plan literal
+    (``cosine_sim_to_const``, same float64 fold order as
+    ``cosine_sim_arrow``, so the rounded scores agree bit for bit), and
+    ``orderBy(desc score, asc index_id).limit(k)`` plans as
+    TakeOrderedAndProject over the pruned scan — no probe frame, no
+    broadcast join, no ranking window. ``exclude_id`` masks one index
+    id (the multi-probe operator's self-match filter); ``schema`` (the
+    layout's, ``cell`` included) skips the per-read inference job.
+    Output: ``(*out_cols, score)``, best first."""
+    idx = read_cells(spark, path, sorted(set(cells)), schema)
+    if exclude_id is not None:
+        idx = idx.filter(F.col(index_id) != F.lit(exclude_id))
+    return (
+        idx.select(
+            index_id,
+            *out_cols,
+            F.round(cosine_sim_to_const(index_vec, qvec), 6).alias("score"),
+        )
+        .orderBy(F.desc("score"), F.asc(index_id))
+        .limit(k)
+        .select(*out_cols, "score")
+    )
 
 
 def ivf_knn_batch(

@@ -13,6 +13,8 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operator
     REFUSAL_PREFIX,
 )
 
+from conftest import SF_DIR
+
 
 @pytest.fixture()
 def engine(spark, tmp_path):
@@ -505,3 +507,149 @@ def test_bounded_corpus_growth_appends_into_ivf_layout(
     fresh = RagEngine(spark, index_path=path, ann_threshold_rows=10)
     fresh.retrieve("delayed clerk errors").collect()
     assert fresh._ann_built
+
+
+# --- one Spark job per question ----------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def routed_engines(spark, tmp_path_factory):
+    """The sf0.001 documents indexed twice: on the default exact route
+    and on the IVF route (``ann_threshold_rows=10``), each warmed by one
+    ``ask`` so route decision, layout build and schema reads are paid."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    docs = load_table(spark, "documents", SF_DIR)
+    base = tmp_path_factory.mktemp("routed")
+    engines = {
+        "exact": RagEngine(spark, index_path=str(base / "exact")),
+        "ivf": RagEngine(spark, index_path=str(base / "ivf"), ann_threshold_rows=10),
+    }
+    for eng in engines.values():
+        assert eng.index_documents(docs) > 0
+        eng.ask("warm-up question about shipping", session_id="warm")
+    assert engines["ivf"]._ann_built  # the route really is IVF
+    return engines
+
+
+def _jobs_in(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("route", ["exact", "ivf"])
+def test_ask_and_recommend_run_one_spark_job(spark, routed_engines, route):
+    eng = routed_engines[route]
+    q = "priority freight shipments delayed by clerk errors"
+    assert _jobs_in(spark, f"one-job-ask-{route}", lambda: eng.ask(q, session_id=route)) == 1
+    assert (
+        _jobs_in(spark, f"one-job-rec-{route}", lambda: eng.recommend(route).collect())
+        == 1
+    )
+
+
+def test_ivf_single_vector_operator_matches_multi_probe_operator(spark, routed_engines):
+    """The engine's literal-vector IVF probe returns exactly what the
+    multi-probe operator returns for the same single question and cells:
+    ids, text, score (bit for bit) and order."""
+    from pyspark.sql import functions as F
+
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.functions.embedder import (
+        embed_text,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.similarity import (
+        ivf_knn_pruned,
+        nearest_cells,
+    )
+
+    eng = routed_engines["ivf"]
+    codebook = eng._load_codebook()
+    texts = [r.text for r in eng.index().orderBy("doc_id").limit(16).collect()]
+    questions = [" ".join(t.split()[:6]) for t in texts] + [
+        "priority freight shipments delayed by clerk errors",
+        "what about the orchard yield",
+        "customer complaints",
+        "",
+    ]
+    assert len(questions) >= 20
+    for q in questions:
+        qvec = embed_text(q, eng.dim)
+        cells = nearest_cells(qvec, codebook, eng.ann_nprobe)
+        probes = spark.createDataFrame(
+            [(-1, [float(x) for x in qvec])], "query_id long, qvec array<double>"
+        )
+        old = (
+            ivf_knn_pruned(
+                spark,
+                eng._ann_paths()[0],
+                probes,
+                codebook,
+                k=eng.k,
+                nprobe=eng.ann_nprobe,
+                probe_cells=cells,
+                n_probes=1,
+                index_id="cid",
+                payload_cols=("doc_id", "chunk_id", "text"),
+            )
+            .select("doc_id", "chunk_id", "text", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id"), F.asc("chunk_id"))
+            .collect()
+        )
+        new = eng._topk_chunks(qvec, eng.k, payload_cols=("text",)).collect()
+        assert [tuple(r) for r in new] == [tuple(r) for r in old], q
+        assert len(new) == eng.k
+
+
+def test_ivf_route_mmr_and_hybrid_return_k_rows(routed_engines):
+    eng = routed_engines["ivf"]
+    q = "priority freight shipments delayed by clerk errors"
+    for st in ("mmr", "hybrid"):
+        rows = eng.retrieve(q, search_type=st).collect()
+        assert len(rows) == eng.k, st
+
+
+@pytest.mark.parametrize("route", ["exact", "ivf"])
+def test_cached_schemas_still_see_in_session_appends(spark, tmp_path, monkeypatch, route):
+    """The index and IVF-layout schemas are cached per engine, the file
+    listing is not: after an in-session append, the next ``ask`` finds
+    a newly added chunk (its own text as the question) as top-1. On the
+    IVF route the append goes into the existing layout, not a rebuild."""
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators import (
+        similarity as sim,
+    )
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
+        load_table,
+    )
+
+    threshold = {"exact": 1_000_000, "ivf": 10}[route]
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"), ann_threshold_rows=threshold)
+    docs = load_table(spark, "documents", SF_DIR)
+    assert eng.index_documents(docs.filter("doc_id % 10 != 0")) > 0
+    eng.ask("priority freight shipments")  # caches the schemas (and layout)
+    assert eng._index_schema is not None
+    assert (eng._ivf_schema is not None) == (route == "ivf")
+
+    def boom(*a, **k):
+        raise AssertionError("bounded growth retrained/rewrote the IVF layout")
+
+    monkeypatch.setattr(sim, "train_centroids_sample", boom)
+    monkeypatch.setattr(sim, "write_ivf_index", boom)
+    assert eng.index_documents(docs.filter("doc_id % 10 = 0")) > 0
+    new_chunk = (
+        eng.index()
+        .filter("doc_id % 10 = 0")
+        .orderBy("doc_id")
+        .select("doc_id", "chunk_id", "text")
+        .first()
+    )
+    top = eng.ask(new_chunk.text)["retrieved"][0]
+    assert (top.doc_id, top.chunk_id) == (new_chunk.doc_id, new_chunk.chunk_id)
+    assert eng._ann_built == (route == "ivf")

@@ -7,7 +7,9 @@ from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.function
     split_text_recursive,
 )
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.operators.retrieval import (
+    REFUSAL_PREFIX,
     build_chunk_index,
+    postprocess_answer,
     postprocess_answers,
 )
 from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.plans.flagship import (
@@ -79,3 +81,47 @@ def test_postprocess_answers(spark):
         "First line.",
         "Single line answer",
     ]
+
+
+def _column_postprocess(spark, answers: list) -> list:
+    df = spark.createDataFrame([(a,) for a in answers], "answer string")
+    return [r.answer for r in postprocess_answers(df).collect()]
+
+
+def test_postprocess_answer_edge_cases_match_column_form(spark):
+    cases = [
+        REFUSAL_PREFIX,
+        REFUSAL_PREFIX + " about llamas.\nSecond line.",
+        "Sorry: " + REFUSAL_PREFIX + " here.",
+        "First line.\r\nSecond line.",
+        "\nafter a leading newline",
+        "",
+        None,
+    ]
+    assert [postprocess_answer(a) for a in cases] == _column_postprocess(spark, cases)
+
+
+def test_postprocess_answer_property_matches_column_form(spark):
+    """Hypothesis: the driver-side scalar twin agrees with the Column
+    form on generated answers. Fragments bias the strings towards the
+    rule's edges (refusal prefix anywhere, line breaks of every kind);
+    one Spark job checks a whole generated batch."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    fragment = st.one_of(
+        st.sampled_from(
+            [REFUSAL_PREFIX, REFUSAL_PREFIX[:20], "\n", "\r\n", "\r", " ", ""]
+        ),
+        st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=12),
+    )
+    answer = st.one_of(st.none(), st.lists(fragment, max_size=5).map("".join))
+
+    @settings(max_examples=15, deadline=None)
+    @given(st.lists(answer, min_size=1, max_size=40))
+    def check(answers):
+        assert [postprocess_answer(a) for a in answers] == _column_postprocess(
+            spark, answers
+        )
+
+    check()
