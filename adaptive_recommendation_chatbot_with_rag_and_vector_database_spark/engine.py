@@ -138,7 +138,8 @@ class RagEngine:
     _sessions: dict[str, list[dict]] = field(default_factory=dict)
     _index_rows: int | None = field(default=None, repr=False)
     # the index parquet's schema, read once: a schema-less read runs a
-    # footer-reading Spark job per question; reset with _index_rows
+    # footer-reading Spark job per question. Appends keep it unless
+    # they change the one input-typed column, doc_id (index_documents)
     _index_schema: object = field(default=None, repr=False)
     # True once THIS instance has verified (or written) an IVF layout
     # matching the current corpus — the per-question short-circuit; an
@@ -161,7 +162,15 @@ class RagEngine:
         AI.py:89-96) — deferred to the first retrieval after a change,
         so a sub-threshold build never pays even the routing count."""
         self._index_rows = None  # size changed: re-count lazily
-        self._index_schema = None
+        # appended rows carry the cached columns (chunk_id, text,
+        # embedding and content_hash are typed by the writer), so the
+        # schema survives unless docs brings a different doc_id type
+        if (
+            self._index_schema is not None
+            and docs.schema["doc_id"].dataType
+            != self._index_schema["doc_id"].dataType
+        ):
+            self._index_schema = None
         n_new = write_index_incremental(
             docs, self.index_path, chunk_size=self.chunk_size, dim=self.dim
         )
@@ -530,11 +539,8 @@ class RagEngine:
         re-scans the full index per question (inline LSH banding
         included — measured 17.9 s vs the exact scan's 3.4 s at the
         2 M-chunk tier) just races the exact scan and loses; only
-        index-time structure beats it. The masked id −1 (the
-        multi-probe operator's self-match filter, kept so results stay
-        identical) cannot collide with any packed chunk id. Output
-        schema matches the exact path: (doc_id, chunk_id, *payload,
-        score).
+        index-time structure beats it. Output schema matches the exact
+        path: (doc_id, chunk_id, *payload, score).
 
         One Spark job per question on both routes: the index and IVF
         layout schemas are read once per corpus (no per-question
@@ -572,7 +578,6 @@ class RagEngine:
             # to serve 4 of them (measured: that join alone cost more
             # than the brute-force scan it was meant to avoid)
             out_cols=("doc_id", "chunk_id", *payload_cols),
-            exclude_id=-1,
             schema=self._ivf_schema,
         )
 

@@ -464,8 +464,9 @@ def ivf_knn_pruned(
     the wrong cells for every other probe (recall loss with no error),
     so the call raises unless the probe set has exactly one row. A
     caller that already knows its probe count passes ``n_probes`` to
-    skip the verification job (the interactive engine passes 1); pass
-    ``probe_cells=None`` to keep per-probe nprobe semantics."""
+    skip the verification job; pass ``probe_cells=None`` to keep
+    per-probe nprobe semantics. (A single interactive question is
+    served by ``ivf_topk_cells`` instead, in one job.)"""
     if probe_cells is not None:
         if n_probes is None:
             n_probes = probes.limit(2).count()
@@ -527,8 +528,8 @@ def ivf_topk_cells(
     index_id: str = "vec_id",
     index_vec: str = "embedding",
     out_cols: tuple[str, ...] = (),
-    exclude_id: int | None = None,
-    schema=None,
+    *,
+    schema,
 ) -> DataFrame:
     """Single-vector IVF top-k over the cells ``cells`` of a
     cell-partitioned layout: the interactive-question twin of
@@ -538,15 +539,13 @@ def ivf_topk_cells(
     ``cosine_sim_arrow``, so the rounded scores agree bit for bit), and
     ``orderBy(desc score, asc index_id).limit(k)`` plans as
     TakeOrderedAndProject over the pruned scan — no probe frame, no
-    broadcast join, no ranking window. ``exclude_id`` masks one index
-    id (the multi-probe operator's self-match filter); ``schema`` (the
-    layout's, ``cell`` included) skips the per-read inference job.
-    Output: ``(*out_cols, score)``, best first."""
-    idx = read_cells(spark, path, sorted(set(cells)), schema)
-    if exclude_id is not None:
-        idx = idx.filter(F.col(index_id) != F.lit(exclude_id))
+    broadcast join, no ranking window. There is no probe row, so the
+    multi-probe operator's self-match filter has nothing to mask.
+    ``schema`` (the layout's, ``cell`` included) skips the per-read
+    inference job. Output: ``(*out_cols, score)``, best first."""
     return (
-        idx.select(
+        read_cells(spark, path, sorted(set(cells)), schema)
+        .select(
             index_id,
             *out_cols,
             F.round(cosine_sim_to_const(index_vec, qvec), 6).alias("score"),

@@ -642,14 +642,36 @@ def test_cached_schemas_still_see_in_session_appends(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(sim, "train_centroids_sample", boom)
     monkeypatch.setattr(sim, "write_ivf_index", boom)
+    schema = eng._index_schema
     assert eng.index_documents(docs.filter("doc_id % 10 = 0")) > 0
     new_chunk = (
-        eng.index()
+        spark.read.parquet(eng.index_path)
         .filter("doc_id % 10 = 0")
         .orderBy("doc_id")
         .select("doc_id", "chunk_id", "text")
         .first()
     )
-    top = eng.ask(new_chunk.text)["retrieved"][0]
+    if route == "exact":
+        # the append kept the index schema: the next ask is still one job
+        res = {}
+        group = "post-append-ask"
+        assert _jobs_in(spark, group, lambda: res.update(eng.ask(new_chunk.text))) == 1
+    else:
+        res = eng.ask(new_chunk.text)  # also appends into the IVF layout
+    top = res["retrieved"][0]
     assert (top.doc_id, top.chunk_id) == (new_chunk.doc_id, new_chunk.chunk_id)
     assert eng._ann_built == (route == "ivf")
+    assert eng._index_schema is schema
+
+
+def test_append_with_other_doc_id_type_rereads_index_schema(spark, tmp_path):
+    """doc_id is the one index column typed by the caller's frame, so an
+    append that brings another doc_id type drops the cached schema."""
+    eng = RagEngine(spark, index_path=str(tmp_path / "index"))
+    eng.index_documents(spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string"))
+    eng.ask("alpha")
+    assert eng._index_schema["doc_id"].dataType.typeName() == "long"
+    eng.index_documents(spark.createDataFrame([(2, "gamma delta")], "doc_id long, text string"))
+    assert eng._index_schema is not None
+    eng.index_documents(spark.createDataFrame([(3, "epsilon")], "doc_id int, text string"))
+    assert eng._index_schema is None
