@@ -14,13 +14,15 @@ orders by the rounded measure with an id tie-break.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.text import N_BANDS
 from .operators.dedup import connected_components, minhash_near_dup
 from .queries_text import _SQL_DTOKS, _sql_minhash_bands
-from .registry import query
+from .registry import query, substrate
 from .sources.loaders import load_table
 
 
@@ -429,6 +431,12 @@ def q_vector_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- dedup clustering (connected components) -------------------------------
 
+
+def _documents_identity(sf_dir: str) -> tuple[int, int]:
+    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    return st.st_mtime_ns, st.st_size
+
+
 #: clustering result memoized per (app, corpus identity) — the same
 #: materialized-intermediate pattern as the IVF codebook cache
 #: (operators/similarity.py:265): q_dedup_components and
@@ -438,29 +446,17 @@ def q_vector_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: regenerated fixture can never serve a stale clustering; the cached
 #: plan is an eager localCheckpoint (a few rows per cluster), so the
 #: second consumer pays a scan of that, not the LSH + CC rounds.
-_CC_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _components_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(path)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        st.st_mtime_ns,
-        st.st_size,
+@substrate(
+    "dedup_components",
+    consumers=("q_dedup_components", "q_dedup_survivorship"),
+    variants={"dedup_components": _documents_identity},
+)
+def _components(spark: SparkSession, sf_dir: str, mtime_ns: int, size: int):
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    edges = minhash_near_dup(docs, threshold=0.7)
+    return connected_components(edges, docs, id_col="doc_id").localCheckpoint(
+        eager=True
     )
-    df = _CC_CACHE.get(key)
-    if df is None:
-        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-        edges = minhash_near_dup(docs, threshold=0.7)
-        df = connected_components(edges, docs, id_col="doc_id").localCheckpoint(
-            eager=True
-        )
-        _CC_CACHE[key] = df
-    return df
 
 
 def _sql_dedup_components(threshold: float) -> str:
@@ -518,8 +514,8 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The clustering itself comes from the per-(app, corpus)
     materialization cache shared with q_dedup_survivorship (see
-    ``_components_cached``) — two policies, one cluster assignment."""
-    return _components_cached(spark, sf_dir)
+    ``_components``) — two policies, one cluster assignment."""
+    return _components(spark, sf_dir, *_documents_identity(sf_dir))
 
 
 @query(
@@ -1315,7 +1311,7 @@ def q_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.text import quality_score
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    cc = _components_cached(spark, sf_dir)
+    cc = _components(spark, sf_dir, *_documents_identity(sf_dir))
     qual = docs.select("doc_id", quality_score("text").alias("quality"))
     j = cc.select("doc_id", "component").join(qual, "doc_id")
     w = Window.partitionBy("component").orderBy(

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .registry import query
+from .registry import query, substrate
 from .sources.loaders import load_table
 
 # --- W18a: PSI feature-drift report ----------------------------------------
@@ -1091,25 +1091,21 @@ def q_feature_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- MO11: ROC AUC via the rank-sum identity --------------------------------
 
-#: session-cached score tie-class substrate, keyed by (applicationId,
+#: session-cached score tie-class substrate, keyed by (session,
 #: sf_dir): q_roc_auc, q_pr_auc and q_threshold_metrics each rebuilt
 #: the IDENTICAL (score, pos_cnt, neg_cnt, bkt) table — the same
 #: orders⋈lineitem label join + two aggregates — so it's built once
 #: per session (the daily_orders pattern). Values bit-identical to
 #: each query's standalone build; no oracle changes.
-_SCORE_CLASSES_CACHE: dict = {}
-
-
+@substrate(
+    "score_classes", consumers=("q_pr_auc", "q_roc_auc", "q_threshold_metrics")
+)
 def _score_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(score, pos_cnt, neg_cnt, bkt) over orders' does-price-predict-
     returns label: score = o_totalprice, pos = the order has a returned
     line, counts int64-exact, bkt = floor(score/10000) (the two-phase
     prefix-sum bucket both AUC siblings window on). Eagerly
     checkpointed once per (session, sf_dir); |distinct scores| rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SCORE_CLASSES_CACHE.get(key)
-    if hit is not None:
-        return hit
     o = load_table(spark, "orders", sf_dir)
     li = load_table(spark, "lineitem", sf_dir)
     lab = (
@@ -1121,7 +1117,7 @@ def _score_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("pos")
         )
     )
-    b = (
+    return (
         lab.groupBy("score")
         .agg(
             F.sum("pos").cast("long").alias("pos_cnt"),
@@ -1130,8 +1126,6 @@ def _score_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("bkt", F.floor(F.col("score") / 10000.0).cast("long"))
         .localCheckpoint()
     )
-    _SCORE_CLASSES_CACHE[key] = b
-    return b
 
 
 @query(

@@ -18,27 +18,20 @@ from pyspark.sql import functions as F
 
 from .functions.vector import cosine_sim
 from .operators.retrieval import build_chunk_index
-from .registry import query
+from .registry import query, substrate
 from .sources.loaders import load_table
 
-#: session-cached chunk index, keyed by (applicationId, sf_dir): the
+#: session-cached chunk index, keyed by (session, sf_dir): the
 #: build (S4) and its invariant audit (q_index_quality) consume the
 #: IDENTICAL documents->chunk->embed->hash result, so building it once
 #: per session and localCheckpointing removes a duplicate run of the
 #: pipeline's two Python stages (chunker + embedder — the single most
 #: expensive per-query cost in the round-9 bench). Values unchanged:
 #: both consumers read the same deterministic rows either way.
-_CHUNK_INDEX_CACHE: dict = {}
-
-
+@substrate("chunk_index", consumers=("q_build_index", "q_index_quality"))
 def _chunk_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CHUNK_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
-    idx = build_chunk_index(load_table(spark, "documents", sf_dir)).localCheckpoint()
-    _CHUNK_INDEX_CACHE[key] = idx
-    return idx
+    return build_chunk_index(load_table(spark, "documents", sf_dir)).localCheckpoint()
+
 
 # Query side of the kNN join: one probe row every 50 ids (10 probes over
 # the 500-row fixture index) — scan-friendly and self-contained in SQL.
@@ -193,7 +186,7 @@ def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: session-cached ANN results, keyed by (applicationId, sf_dir, route):
+#: session-cached ANN results, keyed by (session, sf_dir, route):
 #: three sibling groups each re-ran the IDENTICAL full-probe ANN call —
 #: lsh_knn for q_ann_lsh + q_ann_lsh_quality + q_ann_recall's LSH side,
 #: ivf_knn(16,12) for q_ann_ivf_quality + q_ann_recall's IVF side, and
@@ -204,17 +197,18 @@ def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: bit-identical rows — no second ANN pass. q_ann_ivf's default-budget
 #: call has one consumer and stays uncached (a checkpoint there would
 #: only add a materialization job).
-_ANN_RESULT_CACHE: dict = {}
-
-
+@substrate(
+    "ann_result",
+    consumers=(
+        "q_ann_ivf_quality", "q_ann_lsh", "q_ann_lsh_quality", "q_ann_recall",
+        "q_knn_auto", "q_knn_auto_quality",
+    ),
+    variants={f"ann_{route}_result": (route,) for route in ("lsh", "ivf12", "auto")},
+)
 def _ann_result(spark: SparkSession, sf_dir: str, route: str) -> DataFrame:
     from .operators.retrieval import knn_auto
     from .operators.similarity import ivf_knn, lsh_knn
 
-    key = (spark.sparkContext.applicationId, sf_dir, route)
-    hit = _ANN_RESULT_CACHE.get(key)
-    if hit is not None:
-        return hit
     if route == "lsh":
         ann = lsh_knn(_probes(spark, sf_dir), _emb(spark, sf_dir), k=_K)
     elif route == "ivf12":
@@ -236,9 +230,7 @@ def _ann_result(spark: SparkSession, sf_dir: str, route: str) -> DataFrame:
         )
     else:  # pragma: no cover - internal routes only
         raise KeyError(route)
-    ann = ann.localCheckpoint()
-    _ANN_RESULT_CACHE[key] = ann
-    return ann
+    return ann.localCheckpoint()
 
 
 @query("q_ann_lsh")  # approximate by design → rows-only oracle
@@ -276,16 +268,19 @@ _RECALL_PANEL = 64
 _PARITY_PANEL = 512
 
 #: exact ground-truth panel shared by q_ann_recall and the three
-#: q_ann_*_quality twins, keyed by (applicationId, sf_dir): each of the
+#: q_ann_*_quality twins, keyed by (session, sf_dir): each of the
 #: four queries needs the IDENTICAL brute-force top-K over the same
 #: fixed probe panel, so computing it once per session and
 #: localCheckpointing the tiny (panel x k) result removes three
 #: duplicate full-index Arrow passes from any run that executes them
 #: together (the round-8 bench's single largest duplication). Sharing
 #: is semantics-free: every consumer read bit-identical rows before.
-_GT_PANEL_CACHE: dict = {}
-
-
+@substrate(
+    "ann_exact_panel",
+    consumers=(
+        "q_ann_ivf_quality", "q_ann_lsh_quality", "q_ann_recall", "q_knn_auto_quality",
+    ),
+)
 def _exact_panel(spark: SparkSession, sf_dir: str):
     """(exact_df, panel_query_ids): the brute-force (query_id, vec_id)
     top-{_K} over the fixed {_RECALL_PANEL}-probe panel via the Arrow
@@ -294,10 +289,6 @@ def _exact_panel(spark: SparkSession, sf_dir: str):
     from .operators.similarity import brute_topk_partials
     from .sources.loaders import scatter
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GT_PANEL_CACHE.get(key)
-    if hit is not None:
-        return hit
     probes = _probes(spark, sf_dir).orderBy("query_id").limit(_RECALL_PANEL)
     panel = [(r.query_id, r.qvec) for r in probes.collect()]
     dim = len(panel[0][1])
@@ -311,9 +302,7 @@ def _exact_panel(spark: SparkSession, sf_dir: str):
         .select("query_id", "vec_id")
         .localCheckpoint()
     )
-    out = (exact, [q for q, _ in panel])
-    _GT_PANEL_CACHE[key] = out
-    return out
+    return exact, [q for q, _ in panel]
 
 
 @query(

@@ -12,10 +12,15 @@ discipline"):
   order;
 - every top-k cut orders by the rounded score with an id tie-break;
 - column names are aliased identically on both sides.
+
+Intermediates that several queries share register via ``@substrate``:
+one session-keyed cache per builder, which bench warm-up and session
+teardown both walk.
 """
 
 from __future__ import annotations
 
+import functools
 import glob
 import hashlib
 import json
@@ -23,10 +28,13 @@ import os
 from collections.abc import Callable
 from importlib import import_module
 
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLE: dict[str, str] = {}
+_SUBSTRATES: dict[str, Substrate] = {}
 
 _MODULES = (
     "adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_relational",
@@ -65,6 +73,94 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+class Substrate:
+    """A shared intermediate ``build(spark, sf_dir, *args)`` memoized
+    per (applicationId, sf_dir, *args), so no session reads another's
+    entries. ``consumers`` names the queries that read it; ``variants``
+    maps each warm-up label to its extra arguments (a tuple, or a
+    callable of ``sf_dir`` for a key read from the corpus files),
+    default ``{name: ()}``. A hit is served only while the checkpoints
+    behind it still hold all their partitions; else it is rebuilt."""
+
+    def __init__(self, name, build, consumers=(), variants=None):
+        functools.update_wrapper(self, build)
+        self.build = build
+        self.consumers = tuple(consumers)
+        self.variants = variants or {name: ()}
+        #: key -> (value, checkpoint blocks the value reads)
+        self.entries: dict[tuple, tuple] = {}
+
+    def __call__(self, spark: SparkSession, sf_dir: str, *args):
+        sc = spark.sparkContext
+        key = (sc.applicationId, sf_dir, *args)
+        hit = self.entries.get(key)
+        if hit is not None and _blocks_alive(sc, hit[1]):
+            return hit[0]
+        value = self.build(spark, sf_dir, *args)
+        self.entries[key] = (value, _checkpoint_blocks(value))
+        return value
+
+    def clear(self) -> int:
+        """Drop every entry; returns how many there were."""
+        n = len(self.entries)
+        self.entries.clear()
+        return n
+
+
+def substrate(name: str, consumers: tuple[str, ...], variants: dict | None = None):
+    """Register the decorated builder as :class:`Substrate` ``name``."""
+
+    def deco(build) -> Substrate:
+        _SUBSTRATES[name] = Substrate(name, build, consumers, variants)
+        return _SUBSTRATES[name]
+
+    return deco
+
+
+def substrates() -> dict[str, Substrate]:
+    """Substrates of the modules imported so far; ``_load()`` imports all."""
+    return dict(_SUBSTRATES)
+
+
+def _checkpoint_blocks(value) -> tuple[tuple[int, int], ...]:
+    """(rdd id, partitions) of each LogicalRDD leaf of the frames in
+    ``value`` whose local checkpoint has run. File plans, lazy
+    checkpoints not yet run and zero-partition results have none."""
+    blocks = []
+    for df in value if isinstance(value, tuple) else (value,):
+        if not isinstance(df, DataFrame):
+            continue
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() != "LogicalRDD":
+                continue
+            rdd = leaf.rdd()
+            n = rdd.getNumPartitions()
+            if n and rdd.isCheckpointed():
+                blocks.append((rdd.id(), n))
+    return tuple(blocks)
+
+
+def _blocks_alive(sc: SparkContext, blocks) -> bool:
+    """True while every checkpoint in ``blocks`` is still persisted
+    with all partitions cached. A local checkpoint has no lineage: once
+    its blocks are released or lost with an executor, plans over it
+    fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. ``statusStore().rdd``
+    is the one-RDD form of ``getRDDStorageInfo()``, which lists all."""
+    if not blocks:
+        return True
+    jsc = sc._jsc.sc()
+    persistent, store = jsc.getPersistentRDDs(), jsc.statusStore()
+    try:
+        return all(
+            persistent.contains(i) and store.rdd(i).numCachedPartitions() == n
+            for i, n in blocks
+        )
+    except Py4JJavaError:  # no storage entry: nothing cached
+        return False
 
 
 def _load() -> None:

@@ -49,14 +49,11 @@ def get_spark(app_name: str = "rag_engine", cpus: int | None = None) -> SparkSes
 
 
 def _hook_substrate_eviction(spark: SparkSession) -> None:
-    """Wrap ``spark.stop`` so every session-substrate cache is dropped
-    at teardown (VERDICT r10 #4): the module-level caches otherwise
-    hold checkpointed DataFrames — and their Python references — for
-    the life of the process, a leak in any long-lived service that
-    cycles sessions. The checkpoint BLOCKS die with the SparkContext;
-    this releases the references so the entries can't be mistaken for
-    live substrates by a later session (keys embed applicationId, so
-    staleness was already impossible — this is purely the leak)."""
+    """Wrap ``spark.stop`` so every ``@substrate`` entry is dropped at
+    teardown (VERDICT r10 #4): the registry otherwise holds checkpointed
+    DataFrames for the life of the process, a leak in any service that
+    cycles sessions. The checkpoint BLOCKS die with the SparkContext and
+    keys embed the application id, so this is purely the leak."""
     if getattr(spark, "_substrate_evict_hooked", False):
         return
     inner_stop = spark.stop

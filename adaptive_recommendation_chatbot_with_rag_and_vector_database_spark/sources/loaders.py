@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..registry import _load, substrate, substrates
+
 TABLES = (
     "region",
     "nation",
@@ -64,7 +66,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return df
 
 
-#: session-cached day-level orders rollup, keyed by (applicationId,
+#: session-cached day-level orders rollup, keyed by (session,
 #: sf_dir): five temporal/measurement queries (q_kendall_tau,
 #: q_runs_test, q_holt_forecast, q_evt_gumbel,
 #: q_seasonality_strength) each consume the SAME orders->day
@@ -74,9 +76,14 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
 #: values (count / 4-dp-rounded sum / 4-dp-rounded max) are exactly
 #: what each consumer computed standalone, so sharing changes no
 #: result and no oracle.
-_DAILY_ORDERS_CACHE: dict = {}
-
-
+@substrate(
+    "daily_orders",
+    consumers=(
+        "q_decile_transition", "q_evt_gumbel", "q_fano_burstiness", "q_holt_forecast",
+        "q_hurst_rs", "q_kendall_tau", "q_ohlc_monthly", "q_page_trend",
+        "q_peak_detection", "q_runs_test", "q_sax_symbols", "q_seasonality_strength",
+    ),
+)
 def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(d, n_orders, rev, mx) per order day — d = to_date(o_orderdate),
     n_orders = count, rev = round(sum(o_totalprice), 4),
@@ -86,11 +93,7 @@ def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     here so every consumer inherits cross-engine-stable inputs."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DAILY_ORDERS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    daily = (
+    return (
         load_table(spark, "orders", sf_dir)
         .groupBy(F.to_date("o_orderdate").alias("d"))
         .agg(
@@ -100,11 +103,9 @@ def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _DAILY_ORDERS_CACHE[key] = daily
-    return daily
 
 
-#: session-cached part-level revenue rollup, keyed by (applicationId,
+#: session-cached part-level revenue rollup, keyed by (session,
 #: sf_dir): q_rbo_rank_overlap and q_abc_xyz each independently
 #: re-aggregated lineitem to part revenue (VERDICT r9 weak-item lever).
 #: Grain is (l_partkey, yr) with RAW gross/net sums so each consumer
@@ -113,16 +114,10 @@ def daily_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: gross/net are exact 2-4-decimal quantities, so the true per-part sum
 #: is an exact 4-dp decimal and the two-stage float error (~1e-9 rel)
 #: never reaches the 5e-5 rounding boundary — oracles unchanged.
-_PART_REVENUE_CACHE: dict = {}
-
-#: session-cached customer lifetime-revenue rollup: q_lorenz_gini,
-#: q_theil_index (rounded rev) and q_pareto_concentration (raw rev)
-#: each re-scanned orders for the same per-customer sum. Both the
-#: 4-dp-rounded and raw values are carried so every consumer reads
-#: bit-identical inputs to its standalone form — no oracle changes.
-_CUST_REVENUE_CACHE: dict = {}
-
-
+@substrate(
+    "part_revenue",
+    consumers=("q_abc_xyz", "q_demand_intermittency", "q_rbo_rank_overlap"),
+)
 def part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_partkey, yr, week, gross, net, qty) per part × ship-year ×
     ship-week — yr = year(l_shipdate), week = the Monday of
@@ -145,11 +140,7 @@ def part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale factor."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PART_REVENUE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pr = (
+    return (
         load_table(spark, "lineitem", sf_dir)
         .groupBy(
             "l_partkey",
@@ -165,10 +156,17 @@ def part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _PART_REVENUE_CACHE[key] = pr
-    return pr
 
 
+#: session-cached customer lifetime-revenue rollup: q_lorenz_gini,
+#: q_theil_index (rounded rev) and q_pareto_concentration (raw rev)
+#: each re-scanned orders for the same per-customer sum. Both the
+#: 4-dp-rounded and raw values are carried so every consumer reads
+#: bit-identical inputs to its standalone form — no oracle changes.
+@substrate(
+    "cust_revenue",
+    consumers=("q_lorenz_gini", "q_pareto_concentration", "q_theil_index"),
+)
 def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_custkey, rev, rev_raw) per ordering customer — rev =
     round(sum(o_totalprice), 4) (the module convention q_lorenz_gini /
@@ -177,11 +175,7 @@ def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, sf_dir). |customers| rows."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CUST_REVENUE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cust = (
+    return (
         load_table(spark, "orders", sf_dir)
         .groupBy("o_custkey")
         .agg(
@@ -190,8 +184,6 @@ def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    _CUST_REVENUE_CACHE[key] = cust
-    return cust
 
 
 #: session-cached per-document token/length counts: six registered
@@ -205,9 +197,14 @@ def cust_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: contract of functions/tokenize.py) and ``nt_space`` (the raw
 #: single-space split q_pack_sequences/q_corpus_mixture mirror with
 #: DuckDB ``string_split(text, ' ')``).
-_DOC_TOKENS_CACHE: dict = {}
-
-
+@substrate(
+    "doc_tokens",
+    consumers=(
+        "q_corpus_mixture", "q_curriculum_buckets", "q_pack_sequences",
+        "q_padding_efficiency", "q_span_corruption", "q_text_stats", "q_tfidf_keywords",
+        "q_token_count", "q_token_fertility",
+    ),
+)
 def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, source, chars, n_tok, nt_space, bpe_tok) per
     document — chars = length(text), n_tok = |lower/\\s+ tokens|,
@@ -217,13 +214,7 @@ def doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     every consumer reads the exact column type it computed standalone.
     |docs| rows × 7 scalars: the checkpoint is dimension-sized, never
     corpus-sized, at any scale factor."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DOC_TOKENS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    dt = doc_tokens_frame(spark, sf_dir).localCheckpoint()
-    _DOC_TOKENS_CACHE[key] = dt
-    return dt
+    return doc_tokens_frame(spark, sf_dir).localCheckpoint()
 
 
 def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,52 +244,16 @@ def doc_tokens_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def clear_substrate_caches() -> int:
-    """Drop every session-substrate cache entry (ADVICE r9: the
-    module-level caches otherwise hold checkpointed DataFrames for the
-    life of the process, including entries for stopped sessions).
-    Returns the number of entries dropped. Unpersisting is left to
-    session teardown — localCheckpoint blocks die with their
+    """Drop every registered substrate's entries (ADVICE r9: they
+    otherwise outlive their session), returning how many. Unpersisting
+    is left to session teardown — localCheckpoint blocks die with their
     SparkContext — so this only releases the Python references."""
-    from .. import (
-        queries_curation,
-        queries_graphstats,
-        queries_mlops,
-        queries_retrieval,
-        queries_scale,
-        queries_stats,
-        queries_text,
-        queries_vector,
-    )
-
-    caches = (
-        queries_retrieval._RM_HITS_CACHE,
-        queries_stats._ORDER_VALUE_CLASSES_CACHE,
-        queries_stats._ORDER_VALUE_PIVOT_CACHE,
-        queries_text._DOC_SKETCH_CACHE,
-        queries_text._DOC_BIGRAMS_CACHE,
-        queries_graphstats._EDGES_CACHE,
-        queries_graphstats._CN_EDGES_CACHE,
-        queries_curation._BIPARTITE_CACHE,
-        _DAILY_ORDERS_CACHE,
-        _PART_REVENUE_CACHE,
-        _CUST_REVENUE_CACHE,
-        _DOC_TOKENS_CACHE,
-        queries_scale._PRICE_CLASSES_G_CACHE,
-        queries_scale._PRICE_CLASSES_CACHE,
-        queries_scale._ALS_RECS,
-        queries_mlops._SCORE_CLASSES_CACHE,
-        queries_vector._CHUNK_INDEX_CACHE,
-        queries_vector._GT_PANEL_CACHE,
-        queries_vector._ANN_RESULT_CACHE,
-    )
-    n = sum(len(c) for c in caches)
-    for c in caches:
-        c.clear()
-    return n
+    return sum(sub.clear() for sub in substrates().values())
 
 
 def warm_substrates(spark: SparkSession, sf_dir: str) -> dict:
-    """Build every session substrate eagerly, returning {name: sec}.
+    """Build every registered substrate eagerly, returning {label:
+    sec} with one label per variant (e.g. each ANN route).
 
     Called from bench warm-up so substrate construction is a visible
     line item instead of silently landing inside whichever consumer
@@ -308,73 +263,14 @@ def warm_substrates(spark: SparkSession, sf_dir: str) -> dict:
     as they do in any multi-query session."""
     import time
 
-    from .. import (
-        queries_curation,
-        queries_graphstats,
-        queries_retrieval,
-        queries_scale,
-        queries_stats,
-        queries_text,
-        queries_vector,
-    )
-    from ..queries_mlops import _score_classes as _mlops_classes
-
+    _load()
     timings = {}
-    for name, build in (
-        ("daily_orders", lambda: daily_orders(spark, sf_dir)),
-        ("part_revenue", lambda: part_revenue(spark, sf_dir)),
-        ("cust_revenue", lambda: cust_revenue(spark, sf_dir)),
-        ("doc_tokens", lambda: doc_tokens(spark, sf_dir)),
-        (
-            "price_classes",
-            lambda: (
-                queries_scale.price_classes_grouped(spark, sf_dir),
-                queries_scale.price_classes(spark, sf_dir),
-            ),
-        ),
-        ("score_classes", lambda: _mlops_classes(spark, sf_dir)),
-        ("chunk_index", lambda: queries_vector._chunk_index(spark, sf_dir)),
-        ("ann_exact_panel", lambda: queries_vector._exact_panel(spark, sf_dir)),
-        ("ann_lsh_result", lambda: queries_vector._ann_result(spark, sf_dir, "lsh")),
-        (
-            "ann_ivf12_result",
-            lambda: queries_vector._ann_result(spark, sf_dir, "ivf12"),
-        ),
-        (
-            "ann_auto_result",
-            lambda: queries_vector._ann_result(spark, sf_dir, "auto"),
-        ),
-        ("als_recs", lambda: queries_scale._als_recs(spark, sf_dir)),
-        ("doc_sketch", lambda: queries_text._doc_sketch(spark, sf_dir)),
-        ("doc_bigrams", lambda: queries_text._doc_bigrams(spark, sf_dir)),
-        (
-            "copurchase_edges",
-            lambda: queries_graphstats._undirected_edges(spark, sf_dir),
-        ),
-        (
-            "bipartite_edges",
-            lambda: queries_curation._bipartite_edges(spark, sf_dir),
-        ),
-        (
-            "order_value_classes",
-            lambda: queries_stats._order_value_classes(spark, sf_dir),
-        ),
-        (
-            "order_value_pivot",
-            lambda: queries_stats._order_value_pivot(spark, sf_dir),
-        ),
-        (
-            "cn_edges",
-            lambda: queries_graphstats._cn_edges(spark, sf_dir),
-        ),
-        (
-            "rm_hits",
-            lambda: queries_retrieval._rm_hits(spark, sf_dir),
-        ),
-    ):
-        t0 = time.perf_counter()
-        build()
-        timings[name] = round(time.perf_counter() - t0, 3)
+    for sub in substrates().values():
+        for label, args in sub.variants.items():
+            args = args(sf_dir) if callable(args) else args
+            t0 = time.perf_counter()
+            sub(spark, sf_dir, *args)
+            timings[label] = round(time.perf_counter() - t0, 3)
     return timings
 
 

@@ -92,14 +92,13 @@ def test_doc_sketch_substrate_scatters_once_and_consumers_read_it(spark):
     # substrate build, and each consumer's plan reads the checkpointed
     # RDD — no re-scan of documents, no second tokenize pass
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.queries_text import (
-        _DOC_SKETCH_CACHE,
         _doc_sketch,
     )
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources.loaders import (
         DEFAULT_SF_DIR,
     )
 
-    _DOC_SKETCH_CACHE.clear()
+    _doc_sketch.clear()
     try:
         # ADVICE r10 #1: the checkpoint hides the substrate-build
         # exchange, so assert scatter on the PRE-checkpoint build plan
@@ -131,7 +130,7 @@ def test_doc_sketch_substrate_scatters_once_and_consumers_read_it(spark):
             assert "Scan ExistingRDD" in plan  # reads the checkpoint
             assert "FileScan" not in plan  # never re-reads documents
     finally:
-        _DOC_SKETCH_CACHE.clear()
+        _doc_sketch.clear()
 
 
 def test_scatter_is_noop_on_well_partitioned_input(spark):

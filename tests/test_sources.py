@@ -301,11 +301,11 @@ def test_substrate_caches_evict_on_session_stop(spark):
     # VERDICT r10 #4: get_spark wraps spark.stop so every session
     # substrate cache is dropped at teardown. Exercised through a fake
     # session so the suite's shared SparkSession survives the test.
+    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.registry import (
+        substrates,
+    )
     from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.session import (
         _hook_substrate_eviction,
-    )
-    from adaptive_recommendation_chatbot_with_rag_and_vector_database_spark.sources import (
-        loaders,
     )
 
     # the real factory session carries the hook
@@ -320,19 +320,21 @@ def test_substrate_caches_evict_on_session_stop(spark):
     fake = FakeSession()
     _hook_substrate_eviction(fake)
     sentinel = ("test-app", "test-sf")
-    loaders._DAILY_ORDERS_CACHE[sentinel] = object()
-    loaders._DOC_TOKENS_CACHE[sentinel] = object()
+    daily = substrates()["daily_orders"].entries
+    tokens = substrates()["doc_tokens"].entries
+    daily[sentinel] = (object(), ())
+    tokens[sentinel] = (object(), ())
     try:
         fake.stop()
         assert fake.stopped
-        assert sentinel not in loaders._DAILY_ORDERS_CACHE
-        assert sentinel not in loaders._DOC_TOKENS_CACHE
+        assert sentinel not in daily
+        assert sentinel not in tokens
         # idempotent: re-hooking must not double-wrap
         _hook_substrate_eviction(fake)
         assert getattr(fake, "_substrate_evict_hooked", False)
     finally:
-        loaders._DAILY_ORDERS_CACHE.pop(sentinel, None)
-        loaders._DOC_TOKENS_CACHE.pop(sentinel, None)
+        daily.pop(sentinel, None)
+        tokens.pop(sentinel, None)
 
 
 def test_release_local_checkpoint_frees_blocks_and_keeps_consumers(spark):
